@@ -1,167 +1,111 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
-  * Output protocol: after EVERY query completes, the full cumulative
-  * result line (`{"metric":"total",...}`) is re-printed to stdout. Each
-  * line is a valid, complete bench artifact over the queries finished so
-  * far, so a driver timeout/kill at any point still leaves the last
-  * printed line as a usable partial result — the round can never again
-  * lose all per-query numbers to an rc=124 (BENCH_r03 failure mode).
-  * Consumers should take the LAST matching line.
+  * Output protocol: after EVERY cell completes, the cumulative result
+  * line (`{"metric":"total",...}`) is re-printed to stdout. Each line is
+  * a valid, complete bench artifact over the cells finished so far, so
+  * a timeout or kill at any point still leaves the last printed line as
+  * a usable partial result. Consumers take the LAST matching line.
   *
-  * Pass policy (r4, after BENCH_r03 blew the driver wall-clock budget;
-  * streaming revised r5):
-  *   - streaming-sink queries (`*_stream`): TWO timed passes, min.
-  *     r4 assumed their cost was pure engine overhead and ran one pass;
-  *     measured r5, the FIRST streaming invocation in a JVM pays
-  *     ~1.5-1.7 s of micro-batch-planner/state-store/sink JIT on top
-  *     (3.6 s vs 1.95 s steady for the dedup stream), so a single pass
-  *     systematically overstates the first stream queries. Two passes
-  *     add ~10 s wall against the 1500 s budget.
-  *   - batch queries: one warmup pass (JIT + whole-stage-codegen
-  *     compilation dominate cold runs) whose time is FOLDED into the
-  *     min as a free extra sample, then a first timed pass. If the
-  *     first timed pass exceeds [[SlowPassSec]], one more timed pass
-  *     runs — min of 3 samples total ("slow-3pass"); a single pass
-  *     proved storm-prone (BENCH r4 dev: ann_topk_ivf_kmeans measured
-  *     24.7 s on a deopt-storm pass vs 2.7 s steady state), while
-  *     capping bounds the wall cost of slow queries. Fast queries run
-  *     two more passes — min of 4 samples ("min-of-4"; code-cache
-  *     flush/deopt storms on this box can contaminate a whole pass; see
-  *     build.sbt javaOptions).
-  *   - STORM ESCAPE (r6, made adaptive r7): the previous round's
-  *     committed BENCH_LOCAL.json serves as a per-query prior. A fresh
-  *     min that exceeds [[PriorStormFactor]] × its prior is a
-  *     deopt-storm suspect (r5: the driver read untouched queries up
-  *     to 7× high — `rel_stats_summary` 3.15 s vs 0.48 s steady), so
-  *     extra passes keep running until the min drops inside the factor
-  *     OR the query's total wall time crosses [[StormWallCapSec]] —
-  *     the r6 fixed 2-extra-pass cap gave up while storms were still
-  *     hot (7 of 118 driver values landed >2× their committed
-  *     steady-state, `dedup_report` 6.8×). A real regression still
-  *     surfaces: it burns the cap once and keeps its (consistent)
-  *     elevated min. The artifact additionally records
-  *     `storm_ratio` = achieved-min / prior for every query with a
-  *     prior, so a consumer can separate residual storm (ratio high,
-  *     code untouched) from regression (ratio high, code changed)
-  *     mechanically. Cells whose escape cap runs out while still
-  *     outside the factor ship in an `unescaped` array (r14 — the r13
-  *     persistent-storm family was only findable by joining against
-  *     the prior file) and get ONE suite-end revisit pass; those the
-  *     revisit brings back inside the factor move to
-  *     `revisit_cleared` (transient after all), the rest stay listed
-  *     with a twice-sampled elevated min (regression suspects) —
-  *     unless the wall budget starved their revisit, in which case
-  *     they appear in `revisit_pending` (once-sampled; weaker
-  *     evidence). Cells above [[WatchNormFactor]] × the
-  *     suite-median-normalized ratio that carry NO marker in those
-  *     three arrays ship in a derived `watch` array (r16 — r15's
-  *     `ann_prototype_classify` landed at 2.970× prior, 0.001 under
-  *     the trigger, with no marker at all; r17 widened eligibility to
-  *     tripped-then-escaped cells, whose `+stormN` adjudication goes
-  *     only to stderr — ADVICE r16).
-  *     The compact stdout line caps each array at 8 names
-  *     and always carries `*_total` counts (a mass-storm run must not
-  *     push the bounded-tail line past parseability); the full file
-  *     line is uncapped.
-  *     Every line also carries environment telemetry (`sibling_jvms`,
-  *     `load_avg`, `suite_median_storm`, `boot_id`) plus the PRIOR
-  *     file's own provenance (`prior_load_avg`, `prior_boot_id`, when
-  *     it carries them), so a ratio consumer sees both endpoints'
-  *     environments without git archaeology.
+  * Pass policy — fixed, judged inside the run, no cross-run prior:
+  *   - batch cells: one untimed warm-up pass (JIT + whole-stage-codegen
+  *     compilation dominate cold runs), then [[BatchPasses]] timed
+  *     passes;
+  *   - streaming-sink cells (`*_stream`): [[StreamPasses]] timed passes,
+  *     no warm-up (the first stream invocation in a JVM pays ~1.5 s of
+  *     micro-batch planner/state-store JIT, which the second pass
+  *     sheds);
+  *   - a failed pass ends its cell; failed samples never enter the
+  *     summary, and a cell with no good sample reports -1;
   *   - a global wall budget (SPARK_GRAFT_BENCH_BUDGET_SEC, default
-  *     1500 s) degrades the policy to single-pass-no-warmup once
+  *     1500 s) degrades the policy to one pass without warm-up once
   *     exceeded, so the tail of the suite still produces numbers.
-  * Per-query wall time goes to stderr as it happens, so any future
-  * stall is attributable to a specific query.
+  * `queries` holds each cell's min and `value` the sum of mins. The
+  * full artifact line also carries `cells`: per cell the min, median,
+  * sample count n and spread = (max − min) / median, so a noisy cell
+  * is visible in the run that measured it (see [[Cell]]).
+  *
+  * Per-cell wall time goes to stderr as it happens, so a stall is
+  * attributable to a specific cell.
   */
 object Bench {
-  private val SlowPassSec = 5.0
-  private val PriorStormFactor = 3.0
-  /** Per-query wall cap for adaptive storm-escape passes (seconds). */
-  private val StormWallCapSec = 20.0
-  /** `watch` threshold (VERDICT r15 item 2): a cell whose
-    * suite-median-normalized storm ratio exceeds this while carrying
-    * no marker in the `unescaped`/`revisit_cleared`/`revisit_pending`
-    * arrays is a cliff-edge cell — r15 shipped
-    * `ann_prototype_classify` at 2.970× prior, 0.001 under the
-    * [[PriorStormFactor]] trigger, findable only via a prior-file
-    * join; a cell that TRIPS the escape but recovers under the factor
-    * is in the same no-marker boat (its `+stormN` mode goes only to
-    * stderr — ADVICE r16), so it is watch-eligible too. Watch cells
-    * are named in both artifact lines (capped at 8 names +
-    * `watch_total` in the compact line, like the escape arrays);
-    * derivation in [[BenchPriors.watchCells]]. */
-  private val WatchNormFactor = 2.0
+  /** Timed passes per batch cell, after one untimed warm-up. */
+  val BatchPasses = 3
+  /** Timed passes per streaming-sink cell. */
+  val StreamPasses = 2
+
+  /** One cell's timed samples, summarized. Failed passes (negative
+    * samples) are excluded; a cell with none left has n = 0 and reports
+    * -1 for min and median. Spread is (max − min) / median over the good
+    * samples: 0 for a single sample, and the number to read before
+    * trusting a min. */
+  final case class Cell(min: Double, median: Double, n: Int, spread: Double)
+
+  object Cell {
+    def of(samples: Seq[Double]): Cell = {
+      val ok = samples.filter(_ >= 0).sorted
+      if (ok.isEmpty) Cell(-1.0, -1.0, 0, 0.0)
+      else {
+        val n = ok.size
+        val median =
+          if (n % 2 == 1) ok(n / 2) else (ok(n / 2 - 1) + ok(n / 2)) / 2.0
+        val spread = if (median > 0) (ok.last - ok.head) / median else 0.0
+        Cell(ok.head, median, n, spread)
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
+    val spark = Graft.localSession("graft-bench")
     // ERROR, not WARN: the take-the-last-line artifact protocol must
-    // survive a driver TIMEOUT KILL, where the capture is cut at an
-    // arbitrary point. At WARN, Spark logs steadily DURING queries
-    // ("Broadcasting large task binary" fires per stage), so a mid-query
-    // cut leaves a WARN line after the last compact JSON line — measured
-    // r12: a SIGTERM at query 19 left ten of them trailing and strict
-    // last-line extraction failed. At ERROR the only steady-state output
-    // is the per-query stderr progress line followed by the stdout JSON
-    // line, so any cut point leaves a JSON line last (the shutdown-hook
-    // re-print cannot be relied on under a timeout: killing sbt does
-    // NOT kill this forked JVM — measured r12, it ORPHANS with a broken
-    // stdout pipe and keeps running, so no hook fires at the cut point;
-    // see the shutdown-hook block below).
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_LOGLEVEL", "ERROR"))
+    // survive a TIMEOUT KILL, where the capture is cut at an arbitrary
+    // point. At WARN, Spark logs steadily DURING queries ("Broadcasting
+    // large task binary" fires per stage), so a mid-query cut leaves a
+    // WARN line after the last compact JSON line (measured: a SIGTERM at
+    // query 19 left ten of them trailing and strict last-line extraction
+    // failed). At ERROR the only steady-state output is the per-cell
+    // stderr progress line followed by the stdout JSON line, so any cut
+    // point leaves a JSON line last (the shutdown-hook re-print cannot
+    // be relied on under a timeout: killing sbt does NOT kill this
+    // forked JVM — it ORPHANS with a broken stdout pipe and keeps
+    // running, so no hook fires at the cut point).
+    spark.sparkContext.setLogLevel("ERROR")
 
-    // Same-data baseline rows (VERDICT r14 item 4): the bigram pipeline
-    // over the ACTUAL reference corpus /root/reference/354984si.ngl —
-    // the exact 3.5 MB file behind every BASELINE.md number (6.238 s
-    // `main`, 7.379 s `onlyOne` on the reference's best single-box
-    // config, timings.txt:1-17). The standing sf0.1 comparison carried
-    // an honest caveat (the sf0.1 documents corpus is ~6x smaller);
-    // these cells retire it with a direct apples-to-apples wall time.
-    // Bench-only, like the shared_* rows: no oracle entry, no new query
-    // (the VALUES are already golden-pinned by ReferenceCorpusSpec) —
-    // only a timing over the same bytes the reference timed.
+    // Same-data baseline cells: the bigram pipeline over the reference
+    // corpus, the exact 354,984-word file behind every BASELINE.md
+    // number (6.238 s `main`, 7.379 s `onlyOne`). Bench-only, like the
+    // shared_* rows: no oracle entry (the VALUES are golden-pinned by
+    // ReferenceCorpusSpec) — only a timing over the bytes the reference
+    // timed. The artifact carries the corpus's own word count as
+    // `reference_corpus_words`, so an env override to a tiny fixture
+    // cannot ship a flattering number unnoticed; when the corpus is
+    // unreadable both cells are skipped and `reference_cells` says
+    // "missing".
     val refCorpus = sys.env.getOrElse(
       "SPARK_GRAFT_REFERENCE_CORPUS", "/root/reference/354984si.ngl")
     def refWords() =
       sources.WordListSource.read(spark, refCorpus, referenceQuirk = true)
-    val benchOnly: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "bigram_reference_corpus" -> (() =>
-        operators.TextPipeline.bigramProbabilitiesFromWords(refWords())),
-      "bigram_reference_corpus_onlyone" -> (() =>
-        operators.TextPipeline.onlyOneProbabilitiesFromWords(refWords())))
-    // Corpus-swap pin (VERDICT r15 item 3): the two rows above are a
-    // same-data baseline only if they actually read the 354,984-line
-    // file — an env override to a tiny fixture would silently ship a
-    // flattering number. The artifact therefore carries the corpus's
-    // own word count as `reference_corpus_words` next to the cells
-    // (ReferenceCorpusSpec pins the same count against the same env
-    // default); omitted, not fabricated, when the corpus is unreadable
-    // (the two cells then ship -1 from runOnce's failure path anyway).
     val refCorpusWords: Option[Long] =
-      try Some(sources.WordListSource
-        .read(spark, refCorpus, referenceQuirk = true).count())
+      try Some(refWords().count())
       catch {
         case e: Exception =>
           System.err.println(
             s"[bench] reference corpus $refCorpus unreadable: ${e.getMessage}")
           None
       }
+    val benchOnly: Map[String, () => org.apache.spark.sql.DataFrame] =
+      if (refCorpusWords.isEmpty) Map.empty
+      else Map(
+        "bigram_reference_corpus" -> (() =>
+          operators.TextPipeline.bigramProbabilitiesFromWords(refWords())),
+        "bigram_reference_corpus_onlyone" -> (() =>
+          operators.TextPipeline.onlyOneProbabilitiesFromWords(refWords())))
+    // "pending" until both cells have run (they run last)
+    var referenceCells = if (refCorpusWords.isEmpty) "missing" else "pending"
 
     def runOnce(name: String): Double = {
       // operators may persist shared subtrees within a query; drop those
@@ -183,60 +127,28 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
+    /** Up to `k` timed samples; a failed pass ends the cell. */
+    def timed(name: String, k: Int): Seq[Double] = {
+      val samples = scala.collection.mutable.ArrayBuffer[Double]()
+      while (samples.size < k && !samples.exists(_ < 0))
+        samples += runOnce(name)
+      samples.toSeq
+    }
+
     val names = SparkEntry.queries.keys.toSeq.sorted
     val streaming = names.filter(_.endsWith("_stream")).toSet
-    // Per-query priors from the previous round's committed artifact —
-    // read BEFORE the first emit() overwrites the same file. Parsing
-    // lives in [[BenchPriors]] (whitespace-tolerant, unit-tested
-    // against the committed file itself) after the r12 break: an
-    // exact-format in-line parser met a Python-styled re-pin and
-    // silently loaded zero priors, de-arming the storm escape for the
-    // whole driver sweep.
-    val priorFile =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_LOCAL.json")
-    // ONE read serves both the prior map and the provenance fields
-    // below (a separate load() + readString pair re-read the file and
-    // opened a change-between-reads window); None = unreadable/absent,
-    // which keeps load()'s warn contract: warn only when the file
-    // EXISTS but yields zero priors (the r12 silent-de-arm mode).
-    val priorText: Option[String] =
-      try Some(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(priorFile)))
-      catch { case _: Exception => None }
-    val prior: Map[String, Double] =
-      priorText.map(BenchPriors.parse).getOrElse(Map.empty)
-    if (priorText.isDefined && prior.isEmpty)
-      System.err.println(s"[bench] WARNING: prior file $priorFile exists " +
-        "but yielded zero priors (format drift?) - adaptive storm escape " +
-        "is DISABLED")
-    // Prior PROVENANCE (VERDICT r13 item 5): a storm_ratio consumer
-    // needs both endpoints' environments — the r13 adjudication had to
-    // dig the prior's load out of git history to conclude the 14-cell
-    // storm family was host contention, not regression. The prior
-    // file's own telemetry (when it carries any) rides along in every
-    // emitted line as prior_load_avg / prior_boot_id.
-    val priorLoadAvg: Option[Double] =
-      priorText.flatMap(BenchPriors.numField(_, "load_avg"))
-    // Sanitized before interpolation into the artifact JSON: the run's
-    // own boot_id comes from /proc (hex + dashes, safe), but the
-    // PRIOR's is external input (ADVICE r14) — see
-    // [[BenchPriors.sanitizeId]], which BenchPriorsSpec pins.
-    val priorBootId: Option[String] =
-      priorText.flatMap(BenchPriors.strField(_, "boot_id"))
-        .map(BenchPriors.sanitizeId)
     val benchStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
 
-    // --- environment-contamination telemetry (VERDICT r12 item 2) ----
+    // --- environment-contamination telemetry ---------------------------
     // Two measured contamination modes move timings without touching
     // code: an ORPHANED sibling JVM from a killed sbt run (74/258
     // queries 1.3-1.9x high, uniformly) and general host load. The
-    // orphan pre-flight lived only in the verify skill, which the
-    // driver never reads — so the artifact itself now records both at
-    // startup. A sibling is any OTHER java process whose command line
-    // mentions this repo's code ("graft" — the forked classpath and
-    // the sbt runMain args both carry it), excluding this process and
-    // its ancestor chain (the parent sbt's own args say "graft.Bench").
+    // artifact records both at startup. A sibling is any OTHER java
+    // process whose command line mentions this repo's code ("graft" —
+    // the forked classpath and the sbt runMain args both carry it),
+    // excluding this process and its ancestor chain (the parent sbt's
+    // own args say "graft.Bench").
     val siblingJvms: Int = try {
       val self = ProcessHandle.current()
       val ancestors = Iterator.iterate(Option(self))(
@@ -257,30 +169,19 @@ object Bench {
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
     catch { case _: Exception => -1.0 }
-    // The kernel boot UUID makes "same boot as the prior?" mechanical
-    // (the committed-prior discipline is two SAME-boot sweeps, and the
-    // first sweep after a boot reads ~8% high — verify/SKILL.md):
-    // artifact carries its own boot_id; prior_boot_id above carries the
-    // prior's, so a consumer compares without git archaeology.
-    val bootId: String = try
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/sys/kernel/random/boot_id")).trim
-    catch { case _: Exception => "unknown" }
     if (siblingJvms > 0)
       System.err.println(s"[bench] WARNING: $siblingJvms sibling graft " +
         s"JVM(s) detected at startup (load_avg=$loadAvg) - timings may " +
         "be contention-contaminated")
 
-    // Whole-suite codegen/JIT pre-warm at a tiny sf (r8, VERDICT r7 item
-    // 2): the r7 storm tail — 10/226 driver values >2× their steady
-    // prior with the 20 s escape cap exhausted — came from queries whose
-    // FIRST sf0.1 executions still carried Janino compilation + C2
-    // warmup + code-cache churn from neighbors. One untimed sweep at
-    // sf0.001 compiles every query's generated classes up front
-    // (~100-150 s against the 1500 s budget), so the timed loop starts
-    // JIT-hot for the whole suite, not just the query at hand. Disable
-    // with SPARK_GRAFT_BENCH_WARM_DIR="" (and it auto-skips once the
-    // sweep has eaten a quarter of the budget).
+    // Whole-suite codegen/JIT pre-warm at a tiny sf: cells whose FIRST
+    // executions still carried Janino compilation + C2 warmup +
+    // code-cache churn from neighbors read up to 2x high. One untimed
+    // sweep at sf0.001 compiles every query's generated classes up
+    // front, so the timed loop starts JIT-hot for the whole suite, not
+    // just the cell at hand. Disable with SPARK_GRAFT_BENCH_WARM_DIR=""
+    // (and it stops starting queries once it has eaten a quarter of the
+    // budget).
     val warmDir =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM_DIR", "/root/testdata/sf0.001")
     if (warmDir.nonEmpty) {
@@ -290,8 +191,7 @@ object Bench {
       // its own Janino compile + planner warmup serially on the driver
       // thread) — compilation is per-thread work, so an 8-way pool
       // overlaps it. Streaming sinks are excluded: their cost is
-      // micro-batch engine overhead, not codegen, and their own 2-pass
-      // policy already absorbs the first-stream tax. No clearCache()
+      // micro-batch engine overhead, not codegen. No clearCache()
       // inside the sweep (racy across threads); one clear at the end.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       val warmed = new java.util.concurrent.atomic.AtomicInteger
@@ -310,9 +210,9 @@ object Bench {
         warmCap.toLong + 60, java.util.concurrent.TimeUnit.SECONDS)
       if (!drained) {
         // stragglers past the cap must not overlap the timed loop (CPU
-        // contention + clearCache() racing their cache writes — ADVICE
-        // r8): interrupt them (Spark jobs are interruptible) and wait
-        // out the unwind before timing starts
+        // contention + clearCache() racing their cache writes):
+        // interrupt them (Spark jobs are interruptible) and wait out the
+        // unwind before timing starts
         System.err.println("[bench] pre-warm stragglers at cap; interrupting")
         pool.shutdownNow()
         if (!pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -325,84 +225,27 @@ object Bench {
         f"[bench] pre-warm sweep at $warmDir: ${warmed.get}/${batch.size} queries in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // achieved-min / prior per query (only where a prior exists): the
-    // mechanical storm-vs-regression signal the artifact ships (r7)
-    val stormRatio = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // Cells whose adaptive storm escape exhausted [[StormWallCapSec]]
-    // with best still > PriorStormFactor x prior (VERDICT r13 item 2):
-    // the r13 driver sweep hit a PERSISTENT deopt-storm family
-    // (rel_salted_agg 15.4x et al.) that the 20 s cap cannot rescue,
-    // and the artifact shipped the elevated mins with no marker — a
-    // consumer had to join against the prior file to find them. Now
-    // both artifact lines carry `"unescaped":[...]` (storms the escape
-    // could not clear) and `"revisit_cleared":[...]` (unescaped cells
-    // whose ONE suite-end revisit pass came back inside the factor —
-    // persistent storms sometimes clear after the code cache churns
-    // through the rest of the suite, and whether they do is now
-    // measured, not conjectured).
-    val unescaped = scala.collection.mutable.LinkedHashSet[String]()
-    val revisitCleared = scala.collection.mutable.LinkedHashSet[String]()
-    // unescaped cells whose suite-end revisit was SKIPPED by the wall
-    // budget: a still-listed cell is only a "twice-sampled regression
-    // suspect" if its revisit actually ran — a budget-starved sweep
-    // must say so, not imply extra sampling that never happened.
-    // Populated when the revisit phase starts (names drain as each
-    // revisit completes), so it is meaningful in the FINAL line; a
-    // capture cut before the revisit phase shows it empty alongside a
-    // non-empty `unescaped`, which simply means the phase hadn't
-    // started.
-    val revisitPending = scala.collection.mutable.LinkedHashSet[String]()
-    // Only cells named in the three escape arrays above are excluded
-    // from the derived `watch` array — THEY carry their own in-artifact
-    // adjudication. Tripping the escape alone does not exclude (ADVICE
-    // r16): a cell that tripped and then recovered to e.g. 2.9x prior
-    // records its `+stormN` mode only on stderr, so without a watch
-    // marker it would ship exactly the r15 cliff-edge gap watch was
-    // built to close.
-    val adjudicated = (n: String) =>
-      unescaped.contains(n) || revisitCleared.contains(n) ||
-        revisitPending.contains(n)
-    // Self-contained artifact (VERDICT r4 item 3): the driver's log
-    // capture keeps only a tail, which front-truncates the (>2000 char)
-    // final cumulative line — so the SAME line is also rewritten to a
-    // file after every query: always one complete, parseable JSON
-    // object regardless of how the stdout capture was sliced, and
-    // timeout-proof (any prefix of the run leaves the last
-    // fully-written file state).
-    // The default is BENCH_LIVE.json, NOT the prior file (r15): for
-    // eleven rounds the live output defaulted onto BENCH_LOCAL.json —
-    // the very file the storm escape reads its priors from — so every
-    // live run replaced the committed clean prior in the working tree,
-    // and twice a round boundary then committed the contaminated copy
-    // (r13: load_avg 6.89; r14: 4.37). Splitting input from output
-    // removes the failure structurally: the prior now changes ONLY via
-    // a deliberate tools/repin_bench_local.py run (which refuses
-    // contended sweeps), and PriorHygieneSpec keeps asserting the
-    // committed prior's telemetry as defense in depth.
+    val cells = scala.collection.mutable.LinkedHashMap[String, Cell]()
+    // Self-contained artifact: the log capture keeps only a tail, which
+    // front-truncates the (>2000 char) full cumulative line — so the
+    // full line is also rewritten to a file after every cell: always one
+    // complete, parseable JSON object regardless of how the stdout
+    // capture was sliced.
     val outFile = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LIVE.json"))
     // The LAST stdout line of the whole process must be the compact
-    // JSON artifact line (the consumer's take-the-last-line protocol;
-    // see build.sbt's outputStrategy/showSuccess notes). A shutdown
-    // hook re-prints it at JVM exit — after Spark's own stop banners
-    // and after any post-loop output — and mirrors it to stderr as a
-    // second survival channel for captures that interleave the two
-    // streams. Registered through HADOOP's ShutdownHookManager at
-    // priority 1, NOT Runtime.addShutdownHook: raw JVM hooks run
-    // CONCURRENTLY, so Spark's teardown logging could land after the
-    // re-printed line; Hadoop runs its hooks sequentially in
-    // descending priority, and all of Spark's shutdown is one hook at
-    // priority 30, so priority 1 prints strictly after it. NOTE this
-    // covers NORMAL exits only. Measured r12: under a driver-style
-    // timeout (SIGTERM to sbt) the forked JVM is not killed at all —
-    // it ORPHANS with a broken stdout pipe and keeps running — so no
-    // hook fires and the capture is cut at an arbitrary line. The
-    // timeout guarantee comes instead from the quiet steady-state
-    // output contract at the setLogLevel("ERROR") call above: between
-    // per-query JSON lines nothing else prints, so any cut point
-    // leaves a complete JSON line last (verified by SIGTERMing sbt
-    // mid-suite: the 53-query partial artifact strict-parsed).
+    // JSON artifact line (the take-the-last-line protocol; see
+    // build.sbt's outputStrategy/showSuccess notes). A shutdown hook
+    // re-prints it at JVM exit — after Spark's own stop banners — and
+    // mirrors it to stderr as a second survival channel for captures
+    // that interleave the two streams. Registered through HADOOP's
+    // ShutdownHookManager at priority 1, NOT Runtime.addShutdownHook:
+    // raw JVM hooks run CONCURRENTLY, so Spark's teardown logging could
+    // land after the re-printed line; Hadoop runs its hooks sequentially
+    // in descending priority, and all of Spark's shutdown is one hook at
+    // priority 30, so priority 1 prints strictly after it. This covers
+    // NORMAL exits only; the timeout path is covered by the quiet
+    // steady-state output at log level ERROR (see setLogLevel above).
     val lastCompact =
       new java.util.concurrent.atomic.AtomicReference[String](null)
     org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
@@ -418,91 +261,35 @@ object Bench {
     def emit(): Unit = {
       def fmt(v: Double): String = // 4dp: 0.1 ms grain, keeps lines short
         BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-      val qs = results.map { case (k, v) => s""""$k":${fmt(v)}""" }
-        .mkString("{", ",", "}")
-      val sr = stormRatio.map { case (k, v) =>
-        s""""$k":${BigDecimal(v).setScale(3,
-          BigDecimal.RoundingMode.HALF_UP)}"""
+      def secs(s: Iterable[(String, Double)]): String =
+        s.map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
+      val mins = cells.map { case (k, c) => k -> c.min }
+      val total = mins.valuesIterator.filter(_ >= 0).sum
+      val summaries = cells.map { case (k, c) =>
+        s""""$k":{"min":${fmt(c.min)},"median":${fmt(c.median)},""" +
+          s""""n":${c.n},"spread":${fmt(c.spread)}}"""
       }.mkString("{", ",", "}")
-      val total = results.valuesIterator.filter(_ >= 0).sum
-      // suite-median storm ratio = the compare_bench.py boot lens,
-      // carried IN the artifact (VERDICT r12 item 2): a uniform
-      // cross-boot host shift lifts the MEDIAN while a regression or
-      // deopt storm moves few queries a lot, so a consumer can separate
-      // the two without the prior file in hand
-      val medianStorm = {
-        val v = stormRatio.values.toIndexedSeq.sorted
-        if (v.isEmpty) 0.0
-        else if (v.size % 2 == 1) v(v.size / 2)
-        else (v(v.size / 2 - 1) + v(v.size / 2)) / 2.0
-      }
-      // cliff-edge cells (VERDICT r15 item 2, widened ADVICE r17):
-      // above WatchNormFactor x the suite median and not already named
-      // in unescaped/revisit_cleared/revisit_pending — a cell that
-      // tripped the escape but recovered IS watch-eligible; only a
-      // cell carrying one of those JSON markers is excluded. Derived
-      // fresh per emit since both the ratios and the median grow as the
-      // suite runs; ordered worst-first so the compact cap keeps the
-      // cells most worth reading
-      val watch =
-        BenchPriors.watchCells(stormRatio, medianStorm, adjudicated,
-          WatchNormFactor)
-      // prior-provenance fields are emitted only when the prior file
-      // actually carries them (old-format priors don't) — omission,
-      // not fabrication, mirrors the re-pin tool's policy
-      val provenance =
-        priorLoadAvg.map(v => s""","prior_load_avg":${fmt(v)}""").getOrElse("") +
-          priorBootId.map(v => s""","prior_boot_id":"$v"""").getOrElse("")
-      // the corpus-swap pin field (see refCorpusWords above): omitted
-      // when the corpus was unreadable, like the prior provenance
-      val corpusField = refCorpusWords
-        .map(n => s""","reference_corpus_words":$n""").getOrElse("")
       val envFields =
         s""""sibling_jvms":$siblingJvms,"load_avg":${fmt(loadAvg)},""" +
-          s""""suite_median_storm":${fmt(medianStorm)},""" +
-          s""""boot_id":"$bootId"$provenance$corpusField"""
-      def names(s: Iterable[String]): String =
-        s.map(n => s""""$n"""").mkString("[", ",", "]")
-      def escFields(cap: Int): String = {
-        // the compact stdout line must stay under the driver's bounded
-        // tail (~2 KB): a mass-storm run (stale/scale-mismatched prior
-        // -> hundreds of unescaped cells) would otherwise push the
-        // arrays past it and re-break strict tail parsing — cap the
-        // compact arrays and always ship totals so truncation is
-        // detectable; the full file line is uncapped
-        def arr(s: scala.collection.Set[String]) = names(s.take(cap))
-        s""""unescaped":${arr(unescaped)},""" +
-          s""""unescaped_total":${unescaped.size},""" +
-          s""""revisit_cleared":${arr(revisitCleared)},""" +
-          s""""revisit_cleared_total":${revisitCleared.size},""" +
-          s""""revisit_pending":${arr(revisitPending)},""" +
-          s""""revisit_pending_total":${revisitPending.size},""" +
-          s""""watch":${names(watch.take(cap))},""" +
-          s""""watch_total":${watch.size}"""
-      }
+          s""""reference_cells":"$referenceCells"""" +
+          refCorpusWords.map(n => s""","reference_corpus_words":$n""")
+            .getOrElse("")
       // cumulative: every written line is a complete artifact so far
       val line =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"storm_ratio":$sr,${escFields(Int.MaxValue)},$envFields,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${secs(mins)},"cells":$summaries,$envFields,"sf":"$sfDir"}"""
       // stdout carries a COMPACT line (<2 KB) instead of the full one:
-      // the driver keeps only a bounded TAIL of stdout, and the full
-      // cumulative line (>7 KB at 258 queries) was front-truncated past
-      // parseability three rounds running (BENCH_r8-r10 `parsed: null`
-      // — VERDICT r10 item 3). Totals + worst-10 + the reference's
-      // headline pipeline + max storm ratio always fit; the full
-      // per-query map lives in the live artifact file (BENCH_LIVE.json
-      // by default, named in `full_artifact`). Same
-      // take-the-LAST-line protocol.
-      val worst = results.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(10)
+      // a consumer that keeps only a bounded TAIL of stdout
+      // front-truncated the full line (>7 KB at 258 cells) past
+      // parseability. Totals + worst-10 + the reference's headline
+      // pipeline always fit; the full per-cell map lives in the file
+      // named by `full_artifact`. Same take-the-LAST-line protocol.
+      val worst = mins.toSeq.filter(_._2 >= 0).sortBy(-_._2).take(10)
       val headliners = Seq("bigram_probs", "bigram_probs_onlyone",
         "bigram_counts", "trigram_counts", "word_topk")
-        .flatMap(n => results.get(n).map(n -> _))
-      val compactQs = (worst ++ headliners).distinct
-        .map { case (k, v) => s""""$k":${fmt(v)}""" }.mkString("{", ",", "}")
-      val maxStorm = stormRatio.values.foldLeft(0.0)(math.max)
+        .flatMap(n => mins.get(n).map(n -> _))
       val compact =
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$compactQs,""" +
-          s""""queries_done":${results.size},"max_storm_ratio":${fmt(maxStorm)},""" +
-          s"""${escFields(8)},$envFields,"full_artifact":"${outFile.getFileName}","sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${secs((worst ++ headliners).distinct)},""" +
+          s""""queries_done":${cells.size},$envFields,"full_artifact":"${outFile.getFileName}","sf":"$sfDir"}"""
       lastCompact.set(compact)
       println(compact)
       Console.out.flush()
@@ -519,22 +306,21 @@ object Bench {
         case e: Exception =>
           System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
           // the stdout line is COMPACT (worst-10 + headliners only), so an
-          // unwritable cwd would otherwise lose the full per-query map
-          // entirely (ADVICE r11) — fall back to printing the full line
+          // unwritable cwd would otherwise lose the full per-cell map
+          // entirely — fall back to printing the full line
           println(line)
           Console.out.flush()
       }
     }
 
     // Pre-materialize the shared edge graphs before any timed pass, and
-    // ship each build as its OWN artifact line (`shared_*`, the Scaling
-    // naming — VERDICT r8 item 3): consumers then measure CONSUMER cost
-    // over the memoized graph, and a slow build shows up attributed to
-    // the build line instead of smearing onto whichever consumer runs
-    // first (the r8 `dedup_report` 2.5x drift class). One-shot by
-    // nature (the memo makes a second pass free), but the sf0.001
-    // pre-warm sweep above has already compiled the codegen for these
-    // pipelines, so the single sample is JIT-warm.
+    // ship each build as its OWN cell (`shared_*`, the Scaling naming):
+    // consumers then measure CONSUMER cost over the memoized graph, and
+    // a slow build shows up attributed to the build cell instead of
+    // smearing onto whichever consumer runs first. One sample by nature
+    // (the memo makes a second pass free), but the sf0.001 pre-warm
+    // sweep above has already compiled the codegen for these pipelines,
+    // so the single sample is JIT-warm.
     for ((kind, build) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
         "shared_prefix_edges" -> (() => operators.Dedup.nearDupEdgesShared(spark, sfDir)),
         "shared_minhash_edges" -> (() => operators.Dedup.minhashEdgesShared(spark, sfDir)),
@@ -547,122 +333,28 @@ object Bench {
             System.err.println(s"[bench] $kind build failed: ${e.getMessage}")
             -1.0
         }
-      results(kind) = sec
-      for (p <- prior.get(kind) if p > 0 && sec >= 0)
-        stormRatio(kind) = sec / p
-      System.err.println(f"[bench] $kind%-34s best=$sec%8.3f s  (shared-build)")
+      cells(kind) = Cell.of(Seq(sec))
+      System.err.println(f"[bench] $kind%-34s min=$sec%8.3f s  (shared-build)")
       spark.catalog.clearCache()
       emit()
     }
 
-    // benchOnly rows run through the identical pass/storm policy; they
-    // are appended after the SparkEntry names (and excluded from the
-    // sf0.001 pre-warm above — they read the fixed reference corpus, so
-    // a warm-dir pass would be meaningless; their warmup pass in the
-    // batch policy covers JIT)
+    // benchOnly cells run through the same pass policy after the
+    // SparkEntry names (and are excluded from the sf0.001 pre-warm: they
+    // read the fixed reference corpus, and their warm-up pass covers JIT)
     for (name <- names ++ benchOnly.keys.toSeq.sorted) {
       val qStart = elapsed
-      val overBudget = qStart > budgetSec
-      // mode is recorded in the branch actually executed, not re-derived
-      // from the resulting min (ADVICE r5: a slow-branch run whose min
-      // ended below the threshold was mislabeled)
-      var (best, mode) =
-        if (overBudget) (runOnce(name), "budget-1pass")
-        else if (streaming(name)) {
-          val first = runOnce(name)
-          val b = if (first < 0) first
-            else Seq(first, runOnce(name)).filter(_ >= 0).min
-          (b, "stream-2pass")
-        } else {
-          // the warmup is a fully-timed pass over cleared caches — folding
-          // it into the min is a free extra storm-escape sample (a deopt
-          // storm can contaminate EVERY post-warmup pass of one query:
-          // measured r5, ann_topk_lsh min-of-3 read 15.2 s vs 0.35 s
-          // steady). min() with a JIT-cold pass can only improve.
-          val warm = runOnce(name)
-          val first = runOnce(name)
-          if (first < 0) (first, "failed")
-          else if (first > SlowPassSec)
-            (Seq(warm, first, runOnce(name)).filter(_ >= 0).min, "slow-3pass")
-          else
-            (Seq(warm, first, runOnce(name), runOnce(name)).filter(_ >= 0).min,
-              "min-of-4")
-        }
-      // adaptive storm escape vs the previous round's prior (see object
-      // scaladoc): re-run while still outside the factor, up to a
-      // per-query wall cap — a still-hot storm gets as many chances as
-      // 20 s buys, a true regression burns the cap once and keeps its
-      // elevated (and by then well-sampled) min
-      val suspect = prior.get(name)
-        .exists(p => p > 0 && best > PriorStormFactor * p)
-      if (!overBudget && best >= 0 && suspect) {
-        var extra = 0
-        while (best > PriorStormFactor * prior(name) &&
-            elapsed - qStart < StormWallCapSec) {
-          val t = runOnce(name)
-          extra += 1
-          if (t >= 0 && t < best) best = t
-        }
-        mode += s"+storm$extra"
-        // cap exhausted with the min still outside the factor: a
-        // persistent storm (or a true regression) — recorded in the
-        // artifact and queued for the one suite-end revisit below
-        if (best > PriorStormFactor * prior(name)) {
-          unescaped += name
-          mode += "+unescaped"
-        }
-      }
-      results(name) = best
-      for (p <- prior.get(name) if p > 0 && best >= 0)
-        stormRatio(name) = best / p
+      val (samples, mode) =
+        if (qStart > budgetSec) (timed(name, 1), "budget-1pass")
+        else if (streaming(name)) (timed(name, StreamPasses), "stream")
+        else { runOnce(name); (timed(name, BatchPasses), "batch") }
+      val c = Cell.of(samples)
+      cells(name) = c
       System.err.println(
-        f"[bench] $name%-34s best=$best%8.3f s  wall=${elapsed - qStart}%8.3f s  elapsed=$elapsed%8.1f s  ($mode)")
+        f"[bench] $name%-34s min=${c.min}%8.3f s  median=${c.median}%8.3f s  n=${c.n}  spread=${c.spread}%.3f  wall=${elapsed - qStart}%8.3f s  elapsed=$elapsed%8.1f s  ($mode)")
+      if (benchOnly.nonEmpty && benchOnly.keySet.subsetOf(cells.keySet))
+        referenceCells = "ran"
       emit()
-    }
-
-    // Suite-end REVISIT of un-escaped storm cells (VERDICT r13 item 2):
-    // the documented persistent-storm mode poisons the code cache for a
-    // stretch of the suite, but sometimes clears once the JVM has
-    // churned through the remaining queries' codegen — whether a given
-    // cell's storm was persistent-for-20s or persistent-for-the-JVM is
-    // exactly the regression-vs-environment question the consumer has
-    // to adjudicate, so it gets MEASURED: one extra pass per unescaped
-    // cell, min-folded. A cell whose revisit lands back inside the
-    // factor moves to revisit_cleared (its storm was transient after
-    // all); one that stays elevated remains in unescaped with a now
-    // twice-sampled min — the strongest regression signal this harness
-    // can produce without a code diff. Budget-guarded like everything
-    // else: a sweep already past the wall budget ships its list as-is.
-    if (unescaped.nonEmpty) {
-      // every unescaped cell starts PENDING; names drain as revisits
-      // complete, so whatever the budget leaves behind is honestly
-      // marked once-sampled (revisit_pending) instead of masquerading
-      // as a twice-sampled suspect
-      revisitPending ++= unescaped
-      System.err.println(s"[bench] revisiting ${unescaped.size} " +
-        s"un-escaped storm cell(s) at suite end: ${unescaped.mkString(", ")}")
-      for (name <- unescaped.toSeq if elapsed < budgetSec) {
-        val t = runOnce(name)
-        revisitPending -= name
-        val p = prior(name)
-        if (t >= 0 && t < results(name)) {
-          results(name) = t
-          stormRatio(name) = t / p
-        }
-        val cleared = results(name) <= PriorStormFactor * p
-        if (cleared) { unescaped -= name; revisitCleared += name }
-        System.err.println(
-          f"[bench] $name%-34s revisit=$t%8.3f s  min=${results(name)}%8.3f s  " +
-            f"(${if (cleared) "cleared - storm was transient"
-                 else "still elevated - regression suspect"})")
-        emit()
-      }
-      if (revisitPending.nonEmpty) {
-        System.err.println(s"[bench] wall budget exhausted with " +
-          s"${revisitPending.size} revisit(s) pending: " +
-          revisitPending.mkString(", "))
-        emit()
-      }
     }
     spark.stop()
   }

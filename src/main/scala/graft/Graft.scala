@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   * (`ngram_array`, `cosine_similarity`, `topk_agg`, `hist_quantile`, …)
   * and `NativeAsOf.joinAsOf` plans through the custom strategy.
   *
-  * Deliberately NOT set here: master, shuffle partitions, memory — those
-  * belong to the deployment (spark-submit / cluster manager), not the
-  * library. The driver mains (`Verify`/`Bench`/`Prof`) size them for
-  * this container's local mode. */
+  * Deliberately NOT set in [[builder]]: master, shuffle partitions,
+  * memory — those belong to the deployment (spark-submit / cluster
+  * manager), not the library. The driver mains (`Bench`, `Verify`,
+  * `Scaling`, `ProfPhases`, `Explain`) size them for local mode through
+  * [[localSession]]. */
 object Graft {
 
   /** A builder with graft's session extensions and the two configs the
@@ -26,6 +27,36 @@ object Graft {
       .withExtensions(new GraftExtensions()(_))
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.NanosConf, "true")
+
+  /** Cores for a driver main's local session: `SPARK_GRAFT_CPUS` when
+    * set, else every core the JVM sees. */
+  def localCores(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS") match {
+      case None => Runtime.getRuntime.availableProcessors
+      case Some(v) =>
+        val n = v.trim.toIntOption.getOrElse(0)
+        require(n > 0, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+        n
+    }
+
+  /** The local session every driver main runs on: `local[cores]`,
+    * shuffle partitions = cores unless the caller overrides them, UTC
+    * session time, UI off, nanosecond-parquet reads. No session
+    * extensions — the mains measure and verify the plain-DataFrame
+    * plans the queries build. */
+  def localSession(appName: String,
+      shufflePartitions: Option[Int] = None): SparkSession = {
+    val cores = localCores()
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName(appName)
+      .config("spark.sql.shuffle.partitions",
+        shufflePartitions.getOrElse(cores).toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(Tables.NanosConf, "true")
+      .getOrCreate()
+  }
 
   /** Install graft on a live session: SQL-registers the native
     * expressions and the as-of strategy/pruning rule (idempotent). */

@@ -70,8 +70,8 @@ object Scaling {
     * sf0.1) and far below Long overflow at 16 copies. */
   val KeyShift = 10_000_000_000L
 
-  /** The measured panel: the most expensive batch queries from
-    * BENCH_LOCAL.json (streaming sinks excluded — their bounded-fixture
+  /** The measured panel: the most expensive batch cells of a
+    * `graft.Bench` sweep (streaming sinks excluded — their bounded-fixture
     * cost is dominated by fixed micro-batch engine overhead, which
     * scaling sf would mismeasure) plus two cheap representatives as a
     * linear-scan control group. */
@@ -297,20 +297,12 @@ object Scaling {
     val streamPanel = explicitPanel.getOrElse(StreamPanel)
       .filter(_.endsWith("_stream"))
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT", "SCALING.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // At ×64 (38M lineitem rows) 32 shuffle partitions put ~2M rows in
     // every sort/join buffer × 32 concurrent tasks — the measured OOM
     // mode of the first ×64 attempt. More partitions = smaller spillable
     // units; AQE coalesces them back for the small factors.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaling")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
+    val spark = Graft.localSession("graft-scaling",
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.trim.toInt))
     spark.sparkContext.setLogLevel("WARN")
 
     // Untimed JIT/codegen warmup at a tiny sf: without it the FIRST

@@ -2,83 +2,45 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-trips the committed bench-output tail fixtures through the
+/** Round-trips every committed bench-output tail fixture through the
   * REAL consumer-side extraction (`tools/parse_bench_tail.py`) inside
-  * `sbt test` (VERDICT r12 item 4): the take-the-LAST-line artifact
-  * protocol is enforced by conventions spread across Bench (log level
-  * ERROR, compact stdout line, shutdown-hook re-print) and build.sbt
-  * (StdoutOutput, showSuccess=false) — any of which a future edit can
-  * silently break. The fixtures are real captures from the r12 kill
-  * experiments: a SIGTERM-cut mid-suite tail and a normal-exit final
-  * tail; both must STRICT-parse (json.loads of the last non-empty
-  * line, exit code 0 — the brittlest consumer imaginable). If python3
-  * ever disappears from the environment the test fails loudly rather
-  * than skipping: the driver's own consumer is python, so a box that
-  * cannot run the extraction cannot validate the protocol at all. */
+  * `sbt test`: the take-the-LAST-line artifact protocol is enforced by
+  * conventions spread across Bench (log level ERROR, compact stdout
+  * line, shutdown-hook re-print) and build.sbt (StdoutOutput,
+  * showSuccess=false) — any of which a future edit can silently break.
+  * The fixtures are real captures, front-truncated mid-line like a
+  * real bounded tail: timeout-cut and normal-exit runs, including the
+  * artifact shapes of the retired cross-run prior policy (kept so a
+  * consumer of old driver artifacts keeps parsing them). Each must
+  * STRICT-parse (json.loads of the last non-empty line, exit code 0 —
+  * the brittlest consumer imaginable). If python3 ever disappears from
+  * the environment the test fails loudly rather than skipping: the
+  * artifact's consumers are python, so a box that cannot run the
+  * extraction cannot validate the protocol at all. */
 class BenchTailFixtureSpec extends AnyFunSuite {
   import scala.sys.process._
 
-  /** Names inside a compact-line JSON array capture ("a","b" → 2).
-    * `"".split(",")` yields `Array("")` — length 1 — so a bare split
-    * cannot tell an empty `watch:[]` from one name (ADVICE r18); an
-    * empty/blank capture must count 0. */
-  private def arrayNameCount(capture: String): Int = {
-    val g = capture.trim
-    if (g.isEmpty) 0 else g.split(",").length
+  private val fixtureDir = java.nio.file.Paths.get("tools/fixtures")
+
+  private val fixtures: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.list(fixtureDir)
+    try s.iterator().asScala.map(p => s"tools/fixtures/${p.getFileName}")
+      .toSeq.sorted
+    finally s.close()
   }
 
-  test("arrayNameCount distinguishes an empty capture from one name " +
-      "(ADVICE r18: \"\".split(\",\") is Array(\"\"), length 1, so a " +
-      "bare split would report an empty watch array as 1 name and the " +
-      "cap assertion could not catch a regression to watch:[])") {
-    assert(arrayNameCount("") === 0)
-    assert(arrayNameCount("  ") === 0)
-    assert(arrayNameCount(""""only_one"""") === 1)
-    assert(arrayNameCount(""""a","b","c"""") === 3)
-    // the r18 fixture's real capped capture counts exactly the cap
-    val capped = Seq("w1", "w2", "w3", "w4", "w5", "w6", "w7", "w8")
-      .map(n => s""""$n"""").mkString(",")
-    assert(arrayNameCount(capped) === 8)
-  }
+  /** A timeout-cut capture of the current Bench (sf0.001, SIGTERM to
+    * sbt mid-suite, reference corpus absent). */
+  private val fixedPolicyTail = "tools/fixtures/bench_tail_fixed_sigterm.txt"
 
-  private val fixtures = Seq(
-    "tools/fixtures/bench_tail_r12_sigterm.txt", // timeout-cut capture
-    "tools/fixtures/bench_tail_r12_final.txt",   // normal-exit capture
-    // r14: a REAL capture of the unescaped-storm artifact shape — a
-    // forced-low-prior run (priors set to measured/100) whose escape
-    // cap exhausted (+storm118+unescaped) under a wall budget chosen
-    // to STARVE the suite-end revisit, so the final line carries
-    // non-empty "unescaped" AND "revisit_pending" (with *_total
-    // counts) plus the prior-provenance fields; front-truncated
-    // mid-line like a real bounded tail
-    "tools/fixtures/bench_tail_r14_unescaped.txt",
-    // r16: a REAL capture of the watch-array + corpus-pin line shape —
-    // a budget-1pass run at sf0.001 judged against the sf0.1 prior
-    // (budget mode disables the escape, so the scale-mismatch ratios
-    // land in the derived `watch` array: 8 names + watch_total, the
-    // compact cap) with `reference_corpus_words` riding in the env
-    // fields; front-truncated mid-line like a real bounded tail
-    "tools/fixtures/bench_tail_r16_watch.txt",
-    // r17: a REAL capture of unescaped and watch COEXISTING — a
-    // doctored-prior sf0.01 run (three cells' priors forced to
-    // measured/4, /2.5, /3.5) where the /4 and /3.5 cells tripped,
-    // exhausted the escape cap, survived their suite-end revisits
-    // still elevated (unescaped ×2), while the /2.5 cell sailed under
-    // the 3.0 trigger and landed in `watch` — pinning that the watch
-    // derivation excludes exactly the cells the escape arrays already
-    // adjudicate, and nothing else (the ADVICE r16 fix, live)
-    "tools/fixtures/bench_tail_r17_adjudicated.txt",
-    // r18: the REAL r17 driver-sweep tail (from BENCH_r17.json) — the
-    // first live capture where watch_total (9) exceeded the compact
-    // line's 8-name cap, so the overflow cell (rel_large_orders)
-    // exists ONLY in the full-artifact file named by the line's
-    // `full_artifact` field. Pins the cap-plus-total contract below
-    "tools/fixtures/bench_tail_r18_watchcap.txt")
+  test("the fixture set is committed (cwd must be the repo root)") {
+    assert(fixtures.contains(fixedPolicyTail), fixtures)
+    assert(fixtures.size >= 9, fixtures)
+  }
 
   for (fx <- fixtures)
     test(s"$fx strict-parses through tools/parse_bench_tail.py") {
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(fx)),
-        s"committed fixture $fx missing (cwd must be the repo root)")
       val out = new StringBuilder
       val logger = ProcessLogger(l => out.append(l).append('\n'))
       val rc = Seq("python3", "tools/parse_bench_tail.py", fx).!(logger)
@@ -88,63 +50,20 @@ class BenchTailFixtureSpec extends AnyFunSuite {
         s"unexpected extractor output:\n$out")
     }
 
-  test("the r16 fixture's final line carries the watch array and the " +
-      "corpus pin (the two fields VERDICT r15 asked for)") {
-    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "tools/fixtures/bench_tail_r16_watch.txt"))
+  test("the fixed-policy capture's last line carries exactly the compact " +
+      "fields: reference_cells, no cross-run prior or escape fields, " +
+      "under 2 KB") {
+    val txt = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(fixedPolicyTail))
     val last = txt.linesIterator.filter(_.trim.nonEmpty).toSeq.last
-    // capped compact array: 8 names listed, total says 8 (uncapped in
-    // the full-artifact file); BenchPriors' field scanners are the
-    // same code Bench uses to re-read prior telemetry
-    assert(BenchPriors.numField(last, "watch_total") === Some(8.0))
-    assert(last.contains(""""watch":["rel_scalar_funcs""""),
-      "watch array must lead with the worst cell")
-    assert(BenchPriors.numField(last, "reference_corpus_words") ===
-      Some(354984.0))
-  }
-
-  test("the r17 fixture's final line carries unescaped and watch " +
-      "together, disjoint: adjudicated cells keep their escape marker " +
-      "and never double-list in watch (ADVICE r16, live capture)") {
-    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "tools/fixtures/bench_tail_r17_adjudicated.txt"))
-    val last = txt.linesIterator.filter(_.trim.nonEmpty).toSeq.last
-    // the two forced-low-prior cells (measured/4 and /3.5) tripped,
-    // burned the cap, and survived their revisits — unescaped
-    assert(last.contains(
-      """"unescaped":["ann_topk_lsh","ann_topk_pq_trained"]"""), last)
-    assert(BenchPriors.numField(last, "unescaped_total") === Some(2.0))
-    // the measured/2.5 cell never tripped — watch, and ONLY it: the
-    // unescaped pair sits far above the 2.0 normalized watch line too
-    // (4.1x/3.5x vs suite median 0.94) and is excluded purely by its
-    // escape-array membership
-    assert(last.contains(""""watch":["ann_topk_pq"]"""), last)
-    assert(BenchPriors.numField(last, "watch_total") === Some(1.0))
-  }
-
-  test("the r18 fixture pins the watch-cap-overflow contract: 8 names " +
-      "in the compact line, watch_total 9, the ninth cell absent from " +
-      "the line and reachable only via the full_artifact pointer " +
-      "(VERDICT r17 item 5: a parser that trusts the array length " +
-      "silently drops overflow cells)") {
-    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      "tools/fixtures/bench_tail_r18_watchcap.txt"))
-    val last = txt.linesIterator.filter(_.trim.nonEmpty).toSeq.last
-    // cap-plus-total: the listed array is exactly the cap (8,
-    // worst-first) while the total says 9 — total is authoritative
-    val listed = """"watch":\[([^\]]*)\]""".r
-      .findFirstMatchIn(last).map(m => arrayNameCount(m.group(1)))
-    assert(listed === Some(8), s"compact line must cap at 8 names:\n$last")
-    assert(BenchPriors.numField(last, "watch_total") === Some(9.0),
-      "watch_total must carry the UNCAPPED count")
-    // the overflow cell is NOT in the compact line anywhere — the only
-    // route to it is the full artifact the line itself names
-    assert(!last.contains("rel_large_orders"),
-      "the overflow cell must be absent from the capped line")
-    assert(last.contains(""""full_artifact":"BENCH_LIVE.json""""),
-      "the capped line must point at the uncapped full artifact")
-    // and the escape arrays stayed empty: the overflow is watch-only
-    // (widened eligibility on a contended sweep), not a storm signal
-    assert(BenchPriors.numField(last, "unescaped_total") === Some(0.0))
+    assert(last.getBytes("UTF-8").length < 2048, last)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(last)
+    import scala.jdk.CollectionConverters._
+    val keys = json.fieldNames().asScala.toSet
+    assert(keys === Set("metric", "value", "unit", "queries", "queries_done",
+      "sibling_jvms", "load_avg", "reference_cells", "full_artifact", "sf"))
+    assert(json.get("reference_cells").asText === "missing")
+    assert(json.get("metric").asText === "total")
+    assert(json.get("queries").size > 0)
   }
 }

@@ -65,4 +65,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(j.select("rv").as[Option[Long]].head() === Some(7L))
     assert(j.queryExecution.executedPlan.toString.contains("AsOfJoin "))
   }
+
+  test("Graft.localCores reads SPARK_GRAFT_CPUS, defaults to the JVM's cores") {
+    assert(Graft.localCores(Map.empty) ===
+      Runtime.getRuntime.availableProcessors)
+    assert(Graft.localCores(Map("SPARK_GRAFT_CPUS" -> "3")) === 3)
+    assert(Graft.localCores(Map("SPARK_GRAFT_CPUS" -> " 16 ")) === 16)
+    for (bad <- Seq("0", "-2", "four", ""))
+      intercept[IllegalArgumentException](
+        Graft.localCores(Map("SPARK_GRAFT_CPUS" -> bad)))
+  }
 }
